@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
@@ -21,21 +19,8 @@ object Bench {
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner only reclaims dead broadcast/checkpoint blocks
-      // after a JVM GC notices them; the default 30min periodic GC lets
-      // ~100 queries of blocks pile up and the iterative-join queries
-      // near the end of the run measure that pressure, not themselves
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession("graft-bench")
+    val cpus = spark.sparkContext.defaultParallelism
 
     Tables.all.foreach(n => Tables.load(spark, sfDir, n).count())
     // JIT/codegen warmup on a representative small query
@@ -56,7 +41,7 @@ object Bench {
         val t0 = System.nanoTime()
         // pmod keeps the 600M-term sum ≤ 6e14 — raw xxhash64 values
         // overflow Long under ANSI and kill the run
-        spark.range(0L, 600000000L, 1L, cpus.toInt)
+        spark.range(0L, 600000000L, 1L, cpus)
           .selectExpr("sum(pmod(xxhash64(id), 1000000)) AS s")
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9

@@ -303,7 +303,7 @@ object ScaleStress {
       // Without the forced GC, a heavy measurement pays its
       // PREDECESSORS' block residue: q87 at 30× read 92s inside the
       // shared-JVM sweep vs 38s for the identical recurrence in a
-      // clean JVM (GraphAb). Cleanup runs after EVERY materialization
+      // clean JVM. Cleanup runs after EVERY materialization
       // (warmup counts included, both timed passes, both scales) in
       // non-measured time, so src and scaled passes start equally
       // clean and factors compare operators, not harness history.

@@ -68,10 +68,17 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Local session with the settings this engine is designed around:
-    * AQE on, shuffle partitions sized for local[32], UTC timezone.
+  /** The one local session factory: Bench (the measured session),
+    * Verify, Profile, the other mains, the test suite and perfbench all
+    * build their session here, so the session Verify and the specs
+    * check is the session Bench times. `cores` sets `local[cores]` and
+    * the shuffle partition count; it defaults to SPARK_GRAFT_CPUS,
+    * else the JVM's available processors.
     */
-  def localSession(appName: String = "graft", cores: Int = 32): SparkSession = {
+  def localSession(
+      appName: String = "graft",
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)): SparkSession = {
     // Shuffle parallelism defaults to the core count (the right size
     // for the driver's sf0.1 volume: no sliver tasks, AQE coalesces
     // further). At 100×-fixture volume the per-task aggregate state
@@ -87,8 +94,18 @@ object Tables {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.enabled", "true")
+      // Tables.load's events ts normalization is wall-clock-preserving
+      // only under UTC (it requires it)
       .config("spark.sql.session.timeZone", "UTC")
+      // write micros (not INT96) so DuckDB reads identical timestamp
+      // values back from Verify's parquet
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      // ContextCleaner only reclaims dead broadcast/checkpoint blocks
+      // after a JVM GC notices them; the default 30min periodic GC lets
+      // ~100 queries of blocks pile up and the iterative-join queries
+      // near the end of a bench run measure that pressure, not themselves
+      .config("spark.cleaner.periodicGC.interval", "30s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

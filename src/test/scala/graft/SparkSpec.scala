@@ -4,19 +4,18 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared test session: one local SparkSession per JVM (forked sbt test
-  * runs all suites in one JVM, so this is one session total).
+  * runs all suites in one JVM, so this is one session total), built by
+  * the same factory as Bench and Verify so the specs check the session
+  * that is measured. The factory has no warehouse parameter: the temp
+  * warehouse rides in as a system property, which the session's
+  * SparkConf reads when the factory first builds it.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    System.setProperty("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    Tables.localSession("graft-test", cores = 4)
+  }
 
   def resource(name: String): String = {
     val url = Thread.currentThread.getContextClassLoader.getResource(name)
